@@ -12,3 +12,12 @@ def spark():
     s = get_spark("tests", cpus=4, shuffle_partitions=4)
     yield s
     s.stop()
+
+
+@pytest.fixture(scope="module", autouse=True)
+def _release_tracked_persists():
+    """Drop every frame ``cache.tracked_persist`` registered while the
+    module ran, so cache entries do not pile up across the suite."""
+    yield
+    from tf_prisma_api_data_ingestion_spark import cache
+    cache.release_all()

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import urllib.parse
 
+import pytest
 from pyspark.sql import functions as F
 
 from tf_prisma_api_data_ingestion_spark.functions.columns import (
@@ -15,6 +16,7 @@ from tf_prisma_api_data_ingestion_spark.functions.columns import (
 from tf_prisma_api_data_ingestion_spark.operators.json_ops import (
     array_first,
     flatten_array_of_structs,
+    json_rows,
     parse_json_col,
     select_json_fields,
 )
@@ -108,3 +110,24 @@ def test_variant_type_drift_is_null_not_crash(spark):
     got = {r.id: r.k for r in
            v.select("id", variant_field("v", "$.k", "int").alias("k")).collect()}
     assert got == {1: 7, 2: None, 3: None}
+
+
+def test_json_rows_object_and_list(spark):
+    ddl = "a LONG, b STRING"
+    one = json_rows(spark, {"a": 1, "b": "x", "unknown": [1]}, ddl)
+    assert one.schema.simpleString() == "struct<a:bigint,b:string>"
+    assert [tuple(r) for r in one.collect()] == [(1, "x")]
+    many = json_rows(spark, [{"a": 1, "b": "x"}, {"b": "y"}], ddl)
+    assert [tuple(r) for r in many.collect()] == [(1, "x"), (None, "y")]
+    assert json_rows(spark, [], ddl).count() == 0
+
+
+def test_json_rows_type_drift_fails_the_write(spark, tmp_path):
+    """FAILFAST: a string in a LONG field fails the action that reads
+    the frame; it never parses to a null row."""
+    drifted = json_rows(spark, [{"a": 1}, {"a": "14"}], "a LONG")
+    out = str(tmp_path / "drifted")
+    with pytest.raises(Exception, match="(?i)malformed"):
+        drifted.write.mode("overwrite").csv(out)
+    with pytest.raises(Exception, match="(?i)malformed"):
+        json_rows(spark, {"a": "x"}, "a LONG").collect()

@@ -4,6 +4,9 @@ failure."""
 
 from __future__ import annotations
 
+import csv
+import glob
+import math
 import os
 from datetime import date
 
@@ -35,10 +38,58 @@ def test_full_report_run_publishes_three_csvs(spark, tmp_path):
     assert res2["rows"] == res["rows"]
 
 
+def _csv_rows(path: str) -> int:
+    (part,) = glob.glob(os.path.join(path, "part-*.csv"))
+    with open(part, newline="") as f:
+        return len(list(csv.DictReader(f)))
+
+
+def test_full_report_run_scans_alerts_once(spark, tmp_path):
+    """One run = one alerts scan (the planning probe plus one request
+    per page), counts taken from the writes, and at most 5 Spark jobs."""
+    url = mock_api.mock_server_url()
+    server = mock_api.server_state()
+    sc = spark.sparkContext
+    group = "test-e2e-single-scan"
+    before = getattr(server, "alerts_count", 0)
+    sc.setJobGroup(group, "full_report_run job count")
+    try:
+        res = full_report_run(spark, url, mock_api.MOCK_USER,
+                              mock_api.MOCK_PASSWORD, str(tmp_path),
+                              date(2024, 2, 3))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    pages = math.ceil(mock_api.N_ALERTS / mock_api.PAGE_SIZE)
+    assert server.alerts_count - before == 1 + pages
+    prefix = os.path.join(str(tmp_path), "year=2024", "month=2", "day=3")
+    assert res["rows"] == {
+        "inventory": _csv_rows(os.path.join(prefix, "inventory_report")),
+        "alerts": _csv_rows(os.path.join(prefix, "alert_report"))}
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 5
+
+
+def test_full_report_run_type_drift_publishes_nothing(spark, tmp_path,
+                                                      monkeypatch):
+    """A type-drifted inventory body fails the run loudly (FAILFAST) and
+    the staged run rolls back: no manifest, nothing left in staging."""
+    drifted = dict(mock_api.INVENTORY_FIXTURE)
+    drifted["groupedAggregates"] = [
+        dict(row, failedResources=str(row["failedResources"]))
+        for row in mock_api.INVENTORY_FIXTURE["groupedAggregates"]]
+    monkeypatch.setattr(mock_api, "INVENTORY_FIXTURE", drifted)
+    out = str(tmp_path)
+    with pytest.raises(Exception, match="(?i)malformed"):
+        full_report_run(spark, mock_api.mock_server_url(),
+                        mock_api.MOCK_USER, mock_api.MOCK_PASSWORD,
+                        out, date(2024, 2, 4))
+    assert not os.path.exists(os.path.join(out, "_manifests"))
+    staging = os.path.join(out, "_staging")
+    assert not os.path.exists(staging) or os.listdir(staging) == []
+
+
 def test_alert_report_golden_csv_bytes(spark, tmp_path):
     """SURVEY §5.4: golden CSV bytes for the alert report at a fixed run
     date, in the reference's exact QUOTE_NONNUMERIC format."""
-    import glob
     from tf_prisma_api_data_ingestion_spark.plans.report import (
         alert_report_from_fixtures,
     )

@@ -957,17 +957,12 @@ def q_src_get_json(spark, sf_dir):
     """src-get-json (P:75-103): authed GET -> typed DataFrame via explicit
     StructType contract (§1.3), flatten + na.fill like the reference's
     inventory path (P:165-178)."""
-    from .operators.json_ops import flatten_array_of_structs
+    from .plans.e2e import inventory_frame
     from .sources.mock_api import MOCK_PASSWORD, MOCK_USER, mock_server_url
     from .sources.rest import RestClient
     client = RestClient(mock_server_url(), username=MOCK_USER,
                         password=MOCK_PASSWORD, backoff_factor=0.01).login()
-    body = client.get_json("/v1/inventory").body
-    schema = ("timestamp LONG, requestedTimestamp LONG, groupedAggregates "
-              "ARRAY<STRUCT<serviceName STRING, cloudTypeName STRING, "
-              "failedResources LONG, passedResources LONG, totalResources LONG>>")
-    df = spark.createDataFrame([body], schema).select("groupedAggregates")
-    return flatten_array_of_structs(df, "groupedAggregates").na.fill(0)
+    return inventory_frame(spark, client.get_json("/v1/inventory").body)
 
 
 def q_src_paginated_post(spark, sf_dir):
@@ -1255,6 +1250,7 @@ def q_plan_e2e_alert(spark, sf_dir):
     (partition-per-page) -> broadcast join to the policy frame -> the
     alert-report stages (P:210-369). The mock's alert formula makes the
     whole pipeline range()-reproducible for the oracle."""
+    from .plans.e2e import policy_frame
     from .plans.report import alert_report_from_fixtures
     from .sources.mock_api import MOCK_PASSWORD, MOCK_USER, mock_server_url
     from .sources.rest import RestClient, register_alerts_source
@@ -1266,11 +1262,7 @@ def q_plan_e2e_alert(spark, sf_dir):
               .option("base_url", url).option("token", client.token)
               .option("backoff_factor", "0.01").load()
               .withColumn("policyId", F.concat(F.lit("pol-"), F.col("cloudType"))))
-    policies = spark.createDataFrame(
-        [("pol-aws", "AWS baseline", "config", "high"),
-         ("pol-azure", "Azure baseline", "config", "medium"),
-         ("pol-gcp", "GCP baseline", "config", "low")],
-        "policyId STRING, policyName STRING, policyType STRING, severity STRING")
+    policies = policy_frame(spark)
     items = alerts.select(
         "policyId",
         F.struct("account", "accountId", "cloudType", "cloudAccountGroups")

@@ -11,9 +11,10 @@ instead of a silent KeyError.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+import json
+from collections.abc import Mapping, Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -22,6 +23,30 @@ def parse_json_col(df: DataFrame, col: str, schema: StructType | str,
                    out: str = "parsed") -> DataFrame:
     """String JSON column -> typed struct (explicit contract, §1.3)."""
     return df.withColumn(out, F.from_json(F.col(col), schema))
+
+
+def json_rows(spark: SparkSession, obj: Mapping | Sequence[Mapping],
+              ddl: str) -> DataFrame:
+    """Driver-held JSON (one object, or a list of objects) -> a frame
+    with ``ddl``'s columns, built JVM-side.
+
+    The JSON travels as one string literal parsed by ``from_json``, so
+    no Python row ever crosses into Spark: ``createDataFrame(list)``
+    would instead ship pickled rows through an RDD, costing a Python
+    worker round trip in every job that reads the frame. A list becomes
+    one row per element through ``inline``. ``FAILFAST`` keeps the
+    type-drift contract ``createDataFrame``'s schema check gave: a body
+    whose values do not fit ``ddl`` (a string in a LONG field) fails the
+    action that reads it instead of parsing to nulls. Absent fields are
+    null, unknown fields are ignored.
+    """
+    many = not isinstance(obj, Mapping)
+    schema = f"ARRAY<STRUCT<{ddl}>>" if many else ddl
+    parsed = F.from_json(F.lit(json.dumps(obj)), schema, {"mode": "FAILFAST"})
+    one = spark.range(1, numPartitions=1)
+    if many:
+        return one.select(F.inline(parsed))
+    return one.select(parsed.alias("_j")).select("_j.*")
 
 
 def flatten_array_of_structs(df: DataFrame, array_col: str) -> DataFrame:

@@ -9,7 +9,7 @@ three Spark registration paths with oracle-reproducible semantics):
   ``posexplode`` (that formulation stays JVM-side and is what a 100 TB run
   should use — the UDTF exists to exercise the registration surface, and
   its docstring says so).
-- ``micro_sum_udaf``   — Arrow-batched pandas GROUPED_AGG UDAF: exact
+- ``micro_sum_udaf``   — Arrow-batched pandas grouped-aggregate UDAF: exact
   per-group sums carried in integer micro-units so pandas float math can't
   drift from the decimal oracle.
 - ``grouped_demean`` (operators/relational.py) — applyInPandas, the third
@@ -22,6 +22,10 @@ functions.
 
 from __future__ import annotations
 
+# module level, not function-local: `from __future__ import annotations`
+# turns the pandas UDFs' type hints into strings, which Spark resolves
+# against this module's globals to infer the UDF kind
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -63,27 +67,23 @@ def chunk_documents(df: DataFrame, text_col: str = "text",
 
 def micro_sum_udaf(df: DataFrame, key: str = "event_type",
                    value_col: str = "value") -> DataFrame:
-    """Exact per-group value sums through a pandas GROUPED_AGG UDAF.
+    """Exact per-group value sums through a pandas grouped-aggregate UDAF.
 
     The accumulator is an integer count of micro-units (round(v * 1e6)),
     summed exactly, divided back at the edge — so the Arrow-batched pandas
     path produces the same doubles as the decimal-sum oracle regardless of
     batch/partition order. Returns (key, n_events, sum_value).
     """
-    from pyspark.sql.functions import PandasUDFType
-
-    # explicit GROUPED_AGG: this module uses `from __future__ import
-    # annotations`, which turns type hints into strings Spark cannot
-    # resolve against function-local imports
-    @F.pandas_udf("long", PandasUDFType.GROUPED_AGG)
-    def micro_sum(v):
+    # Series -> scalar type hints make both grouped-aggregate UDFs
+    @F.pandas_udf("long")
+    def micro_sum(v: pd.Series) -> int:
         return int(v.mul(1_000_000).round().astype("int64").sum())
 
-    # Spark refuses to mix GROUPED_AGG pandas UDFs with JVM aggregates in
-    # one agg ([INVALID_PANDAS_UDF_PLACEMENT]) — the count rides the same
-    # Arrow batch instead
-    @F.pandas_udf("long", PandasUDFType.GROUPED_AGG)
-    def micro_count(v):
+    # Spark refuses to mix grouped-aggregate pandas UDFs with JVM
+    # aggregates in one agg ([INVALID_PANDAS_UDF_PLACEMENT]) — the count
+    # rides the same Arrow batch instead
+    @F.pandas_udf("long")
+    def micro_count(v: pd.Series) -> int:
         return len(v)
 
     agg = df.groupBy(key).agg(

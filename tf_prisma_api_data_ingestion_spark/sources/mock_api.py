@@ -103,6 +103,10 @@ class _Handler(BaseHTTPRequestHandler):
             self.server.token_expired = True
             self._send(200, {"expired": True})
         elif self.path == "/v2/alerts":
+            # request counter beside login_count: every /v2/alerts call,
+            # probes and rejected ones included (handlers run concurrently)
+            with _SERVER_LOCK:
+                self.server.alerts_count = getattr(self.server, "alerts_count", 0) + 1
             if not self._authed():
                 self._send(401, {"error": "unauthorized"})
                 return
